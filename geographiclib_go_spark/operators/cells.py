@@ -157,21 +157,6 @@ def cell_center(cell, res: int):
     return xyz_to_latlon(x, y, z)
 
 
-def cell_corners(cell, res: int):
-    """4 corner (lat, lon) arrays, shape (..., 4)."""
-    f, i, j = cell_to_fij(cell, res)
-    n = 1 << res
-    lats, lons = [], []
-    for di, dj in ((0, 0), (1, 0), (1, 1), (0, 1)):
-        u = _st_to_uv((i + di) / n)
-        v = _st_to_uv((j + dj) / n)
-        x, y, z = _uv_to_xyz(f, u, v)
-        la, lo = xyz_to_latlon(x, y, z)
-        lats.append(la)
-        lons.append(lo)
-    return np.stack(lats, axis=-1), np.stack(lons, axis=-1)
-
-
 def cell_parent(cell, res: int, parent_res: int):
     """Ancestor cell id (hierarchy is a shift: face prefix preserved)."""
     return np.asarray(cell, dtype=np.int64) >> np.int64(
@@ -264,39 +249,73 @@ def _step1(f, i, j, res: int, di: int, dj: int):
     return rf, ri, rj
 
 
-def neighbors(cells, res: int) -> np.ndarray:
-    """All edge/corner neighbors of each cell (deduped union, includes
-    the cells themselves) — i.e. ring<=1 coverage.  Corner steps are
-    composed of two single steps in both orders, which is exact at cube
-    corners (where the diagonal neighbor does not exist)."""
-    cells = np.unique(np.asarray(cells, dtype=np.int64))
+def _adjacent(cells: np.ndarray, res: int) -> np.ndarray:
+    """(n, 12) edge and corner neighbors of each cell, row-aligned
+    with the input (repeats kept).  Corner steps are composed of two
+    single steps in both orders, which is exact at cube corners (where
+    the diagonal neighbor does not exist)."""
     f, i, j = cell_to_fij(cells, res)
-    acc = [cells]
-    # single steps
+    acc = []
     sides = {}
     for di, dj, name in ((1, 0, "E"), (-1, 0, "W"), (0, 1, "N"),
                          (0, -1, "S")):
-        sf, si, sj = _step1(f, i, j, res, di, dj)
-        sides[name] = (sf, si, sj)
-        acc.append(fij_to_cell(sf, si, sj, res))
-    # diagonals: compose in both orders
+        sides[name] = _step1(f, i, j, res, di, dj)
+        acc.append(sides[name])
     for first, second in (("E", (0, 1)), ("E", (0, -1)),
                           ("W", (0, 1)), ("W", (0, -1)),
                           ("N", (1, 0)), ("N", (-1, 0)),
                           ("S", (1, 0)), ("S", (-1, 0))):
         sf, si, sj = sides[first]
-        tf, ti, tj = _step1(sf, si, sj, res, second[0], second[1])
-        acc.append(fij_to_cell(tf, ti, tj, res))
-    return np.unique(np.concatenate(acc))
+        acc.append(_step1(sf, si, sj, res, second[0], second[1]))
+    af, ai, aj = (np.stack(x, axis=1) for x in zip(*acc))
+    return fij_to_cell(af, ai, aj, res)
 
 
-def ring_expand(cells, res: int, rings: int) -> np.ndarray:
+def neighbors(cells, res: int) -> np.ndarray:
+    """All edge/corner neighbors of each cell (deduped union, includes
+    the cells themselves) — i.e. ring<=1 coverage."""
+    return ring_expand(cells, res, 1)
+
+
+def ring_expand(cells, res: int, rings: int, owners=None):
     """Cells within `rings` king-move steps of the input set (includes
-    the input).  BFS union; exact across faces."""
-    out = np.unique(np.asarray(cells, dtype=np.int64))
-    for _ in range(rings):
-        out = neighbors(out, res)
-    return out
+    the input); exact across faces.  Returns the sorted cells.
+
+    With `owners` (one id per input cell) the input is many sets at
+    once: each owner's cells expand on their own and the result is
+    the (owners, cells) arrays of all pairs, sorted by owner then cell.
+
+    One vectorized frontier BFS over packed (owner, cell) keys serves
+    every owner: N^r(S) = N^(r-1)(S) | adj(frontier), where the
+    frontier is what the previous step added, so each cell's
+    neighbors are computed once."""
+    cells = np.asarray(cells, dtype=np.int64).ravel()
+    own = (np.zeros(cells.size, dtype=np.int64) if owners is None
+           else np.asarray(owners, dtype=np.int64).ravel())
+    uo, dense = np.unique(own, return_inverse=True)
+    span = 6 << (2 * res)  # every cell id at `res` is below this
+    per = max(1, (1 << 62) // span)  # owners per chunk: keys fit int64
+    out_o, out_c = [], []
+    for lo in range(0, uo.size, per):
+        m = (dense >= lo) & (dense < lo + per)
+        seen = np.unique((dense[m] - lo) * span + cells[m])
+        frontier = seen
+        for _ in range(rings):
+            o, c = np.divmod(frontier, span)
+            nb = np.unique((_adjacent(c, res) + (o * span)[:, None]).ravel())
+            pos = np.minimum(np.searchsorted(seen, nb), seen.size - 1)
+            frontier = nb[seen[pos] != nb]
+            if frontier.size == 0:
+                break
+            seen = np.sort(np.concatenate([seen, frontier]),
+                           kind="stable")
+        o, c = np.divmod(seen, span)
+        out_o.append(uo[o + lo])
+        out_c.append(c)
+    cells_out = np.concatenate(out_c) if out_c else cells
+    if owners is None:
+        return cells_out
+    return (np.concatenate(out_o) if out_o else own), cells_out
 
 
 # ---------------------------------------------------------------------------

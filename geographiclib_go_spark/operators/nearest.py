@@ -50,6 +50,23 @@ def _unit_vectors(lat_deg: np.ndarray, lon_deg: np.ndarray) -> np.ndarray:
                     axis=-1)
 
 
+def chord_margin(g: GeodesicModel) -> tuple:
+    """(ratio, pad) of the chord-angle candidate margin: a point can
+    beat a candidate at central angle `kth` in geodesic distance only
+    if its own central angle is <= kth * ratio + pad.  From
+    b * sigma12 <= s12 <= a * sigma12, widened for the
+    geographic-vs-auxiliary-sphere angle difference, O(f) small."""
+    f_abs = abs(g.f)
+    return (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12, 4.0 * f_abs + 1e-12
+
+
+def radius_ang_max(g: GeodesicModel, radius_m: float) -> float:
+    """Central angle (radians, between geographic unit vectors) that
+    every point with geodesic s12 <= radius_m lies within."""
+    ratio, pad = chord_margin(g)
+    return (radius_m / g.b) * ratio + pad
+
+
 def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
                        dim_ids: np.ndarray, dim_lat: np.ndarray,
                        dim_lon: np.ndarray, dim_vec: np.ndarray,
@@ -70,12 +87,9 @@ def nearest_dim_kernel(g: GeodesicModel, lat: np.ndarray, lon: np.ndarray,
     else:
         kth = ang.max(axis=1)
 
-    # margin: a dim row can beat the kth chord candidate in geodesic
-    # distance only if  b * ang_j < a * kth  (plus slack for the
-    # geographic-vs-auxiliary-sphere angle difference, O(f) small)
-    f_abs = abs(g.f)
-    ratio = (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12
-    pad = 4.0 * f_abs + 1e-12                        # radians of slack
+    # a dim row can beat the kth chord candidate in geodesic distance
+    # only inside the chord margin
+    ratio, pad = chord_margin(g)
     cand = ang <= (kth[:, None] * ratio + pad)
 
     rows, cols = np.nonzero(cand)
@@ -201,9 +215,7 @@ def knn_points_topk(points: DataFrame, queries, k: int,
     qlon = np.array([float(r[2]) for r in qrows])
     qvec = _unit_vectors(qlat, qlon)
     g = GeodesicModel(a, f)
-    f_abs = abs(f)
-    ratio = (g.a / g.b) * (1.0 + 8.0 * f_abs) + 1e-12
-    pad = 4.0 * f_abs + 1e-12
+    ratio, pad = chord_margin(g)
     lat_col, lon_col = point_cols
 
     qkey = f"q_{id_col}"
@@ -294,9 +306,7 @@ def radius_dim_join(points: DataFrame, queries, radius_m: float,
     qlon = np.array([float(r[2]) for r in qrows])
     qvec = _unit_vectors(qlat, qlon)
     g = GeodesicModel(a, f)
-    f_abs = abs(f)
-    ang_max = (radius_m / g.b) * ((g.a / g.b) * (1 + 8 * f_abs)
-                                  + 1e-12) + 4 * f_abs + 1e-12
+    ang_max = radius_ang_max(g, radius_m)
     lat_col, lon_col = point_cols
     qkey = f"q_{id_col}"
     out_schema = T.StructType(

@@ -9,11 +9,12 @@ inverse geodesic kernel (inverse.go:30-355) as the exact predicate:
   join (broadcast when the query side is small — made explicit via
   hint, per the north rule).
 - knn_join: iterative ring expansion.  Each round joins the unresolved
-  queries' ring cover against points, takes top-k per query via a
-  window, and resolves queries whose kth distance is below the ring
-  lower bound (validated in tests against the kernel).  Spark has no
-  native kNN join; the loop is driver-coordinated but every step is a
-  declarative DataFrame plan.
+  queries' ring cover against points, drops candidates past the
+  round's ring bound with a native chord predicate, takes top-k per
+  query via a window, and resolves queries whose kth distance is below
+  the ring lower bound (validated in tests against the kernel).  Spark
+  has no native kNN join; the loop is driver-coordinated but every
+  step is a declarative DataFrame plan.
 - pip_join: polygon cover cells (driver-planned, auto-res via
   plan_polygon_res, broadcast) -> equi-join -> exact point-in-polygon
   refine.
@@ -24,8 +25,10 @@ map-only scans in operators/nearest.py (radius_dim_join /
 knn_points_topk — zero shuffle of the big side); the cover/ring plans
 here remain the large-query-side path.
 
-All kernels run as Arrow pandas UDFs over numpy batches; the only
-per-row Python is driver-side cover planning over the SMALL side.
+All kernels run as Arrow pandas UDFs over numpy batches.  Cover
+planning is vectorized over the distinct base cells of a batch (one
+batched cells.ring_expand for ring covers), and each cover UDF is
+exploded directly so Catalyst evaluates it once.
 """
 
 from __future__ import annotations
@@ -48,6 +51,7 @@ from geographiclib_go_spark.kernels.geodesic import (
 from geographiclib_go_spark.functions.geodesic_udfs import (
     make_inverse_s12_udf, make_inverse_udf)
 from geographiclib_go_spark.operators import cells as kcells
+from geographiclib_go_spark.operators import nearest
 from geographiclib_go_spark.operators import pip as kpip
 
 
@@ -60,17 +64,27 @@ def cell_udf(res: int):
     return cell_of
 
 
+def ring_covers_by_cell(la: np.ndarray, lo: np.ndarray, res: int,
+                        rings: int) -> list:
+    """Ring covers for a batch of points: the distinct base cells
+    expand together in one batched ring_expand call, then each row
+    takes its base cell's cover (queries often cluster)."""
+    base = kcells.cell_from_latlon(la, lo, res)
+    uniq, inv = np.unique(base, return_inverse=True)
+    owner, cell = kcells.ring_expand(uniq, res, rings,
+                                     owners=np.arange(uniq.size))
+    cuts = np.searchsorted(owner, np.arange(1, uniq.size))
+    covers = [c.tolist() for c in np.split(cell, cuts)]
+    return [covers[i] for i in inv]
+
+
 def ring_cover_udf(res: int, rings: int):
     """array<long> of all cells within `rings` of the point's cell."""
     @pandas_udf(T.ArrayType(T.LongType()))
     def cover_of(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        base = kcells.cell_from_latlon(lat.to_numpy(np.float64),
-                                       lon.to_numpy(np.float64), res)
-        # expand per unique cell, then map back (queries often cluster)
-        uniq, inv = np.unique(base, return_inverse=True)
-        covers = [kcells.ring_expand(np.array([c]), res, rings).tolist()
-                  for c in uniq]
-        return pd.Series([covers[i] for i in inv])
+        return pd.Series(ring_covers_by_cell(lat.to_numpy(np.float64),
+                                             lon.to_numpy(np.float64),
+                                             res, rings))
     return cover_of
 
 
@@ -162,11 +176,10 @@ def distance_join(points: DataFrame, queries: DataFrame, radius_m: float,
                     if _scan_eligible(queries, id_col, limit_rows=4096)
                     else "cover")
     if strategy == "scan":
-        from geographiclib_go_spark.operators import nearest as _nn
-        return _nn.radius_dim_join(points, queries, radius_m, a=a, f=f,
-                                   point_cols=point_cols,
-                                   query_cols=query_cols,
-                                   id_col=id_col)
+        return nearest.radius_dim_join(points, queries, radius_m, a=a,
+                                       f=f, point_cols=point_cols,
+                                       query_cols=query_cols,
+                                       id_col=id_col)
     plan_res, radius_rad = plan_radius(radius_m, a, f)
     if res is None:
         res = plan_res
@@ -175,11 +188,12 @@ def distance_join(points: DataFrame, queries: DataFrame, radius_m: float,
     q = queries
     for c in q.columns:
         q = q.withColumnRenamed(c, f"q_{c}")
-    q = q.withColumn(
-        "_qcover",
+    # explode the UDF call itself: exploding a column alias lets
+    # Catalyst infer size(_qcover) > 0 below the projection, which
+    # evaluates the cover UDF a second time
+    q = q.withColumn("_cell", F.explode(
         cap_cover_udf(res, radius_rad)(F.col(f"q_{query_cols[0]}"),
-                                       F.col(f"q_{query_cols[1]}")))
-    q = q.withColumn("_cell", F.explode("_qcover")).drop("_qcover")
+                                       F.col(f"q_{query_cols[1]}"))))
 
     # explicit join-strategy selection (north rule): broadcast the
     # exploded query cover when it is small, else sort-merge.
@@ -253,17 +267,27 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
       when the query side is too large to ship in a closure, or when
       query ids are missing/duplicated (the ring plan keys no state
       on them).
+
+    Ring round: all unresolved queries' covers come from one batched
+    ring_expand per Arrow batch; the cell equi-join's candidates then
+    pass a native chord filter (angle <= nearest.radius_ang_max(bound),
+    the same s12 -> angle margin as radius_dim_join) before the s12
+    UDF, so only pairs that can lie within the round's bound cross the
+    Arrow boundary.  The answer is unchanged: every point with
+    s12 <= bound survives the filter, and a query resolves only if its
+    kth distance is <= bound, so the resolved set and each resolved
+    top-k are exactly those of the unfiltered join.  Queries left
+    after max_rounds fall back to a brute-force scan.
     """
     if strategy == "auto":
         strategy = ("scan_topk"
                     if _scan_eligible(queries, id_col, limit_rows=4096)
                     else "ring")
     if strategy == "scan_topk":
-        from geographiclib_go_spark.operators import nearest as _nn
-        return _nn.knn_points_topk(points, queries, k, a=a, f=f,
-                                   point_cols=point_cols,
-                                   query_cols=query_cols,
-                                   id_col=id_col)
+        return nearest.knn_points_topk(points, queries, k, a=a, f=f,
+                                       point_cols=point_cols,
+                                       query_cols=query_cols,
+                                       id_col=id_col)
     g = GeodesicModel(a, f)
     # NO full scan of the fact table at planning time (VERDICT r2
     # item 4): row count from parquet footers (driver-side metadata,
@@ -304,12 +328,15 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     q = q.withColumn(
         "_qrows", F.count(F.lit(1)).over(Window.partitionBy(qid)))
     qlat, qlon = f"q_{query_cols[0]}", f"q_{query_cols[1]}"
+    q = q.withColumns(_unit_vector_cols(qlat, qlon, "_q"))
 
     # caching the celled points avoids re-running the cell UDF each
     # round in the sandbox; at cluster scale prefer persisting the
     # celled table (or bucketing it by _cell) once and reusing it
-    pts = with_cell(points, res, *point_cols, out="_cell").cache()
+    pts = with_cell(points, res, *point_cols, out="_cell")
+    pts = pts.withColumns(_unit_vector_cols(*point_cols, "_p")).cache()
     inv = make_inverse_s12_udf(a, f)
+    helper_cols = ("_cell", "_px", "_py", "_pz", "_qx", "_qy", "_qz")
 
     # the query side is LARGE here (the small side routes to
     # scan_topk), so per-query state never touches the driver: the
@@ -320,21 +347,23 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     results = []
     rings = start_rings  # ring_bound(rings=1) is 0: start past it
     for round_no in range(max_rounds):
-        cover = unresolved.withColumn(
-            "_qcover", ring_cover_udf(res, rings)(F.col(qlat), F.col(qlon)))
-        cover = cover.withColumn("_cell", F.explode("_qcover")) \
-                     .drop("_qcover")
+        # explode the UDF call itself (see distance_join)
+        cover = unresolved.withColumn("_cell", F.explode(
+            ring_cover_udf(res, rings)(F.col(qlat), F.col(qlon))))
         # both sides are big: plain equi-join on the cell key (AQE
         # picks shuffle-hash vs sort-merge and splits skewed cells)
         cand = pts.join(cover, "_cell", "inner")
+        # native chord prefilter: only candidates that can lie within
+        # the round's ring bound reach the s12 UDF (see docstring)
+        bound = kcells.ring_bound_m(res, rings, g.b)
+        cand = cand.filter(_chord_within(nearest.radius_ang_max(g, bound)))
         cand = cand.withColumn(
             "s12", inv(F.col(qlat), F.col(qlon),
                        F.col(point_cols[0]), F.col(point_cols[1])))
         w = Window.partitionBy(qid).orderBy(F.col("s12").asc())
         topk = (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k).drop("_cell")).cache()
+                .filter(F.col("rank") <= k).drop(*helper_cols)).cache()
 
-        bound = kcells.ring_bound_m(res, rings, g.b)
         done_ids = (topk.groupBy(qid)
                     .agg(F.count("*").alias("_n"),
                          F.max("s12").alias("_kth"))
@@ -357,7 +386,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
                        F.col(point_cols[0]), F.col(point_cols[1])))
         w = Window.partitionBy(qid).orderBy(F.col("s12").asc())
         results.append(cand.withColumn("rank", F.row_number().over(w))
-                       .filter(F.col("rank") <= k))
+                       .filter(F.col("rank") <= k).drop(*helper_cols))
 
     out = results[0]
     for r in results[1:]:
@@ -373,6 +402,27 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
            .filter(F.col("_uniq").isNull())
            .drop("_uniq", "_qrows"))
     return out
+
+
+def _unit_vector_cols(lat_col: str, lon_col: str, prefix: str) -> dict:
+    """Native columns {prefix}x/y/z: the unit vector of (lat, lon)."""
+    la = F.radians(F.col(lat_col))
+    lo = F.radians(F.col(lon_col))
+    return {f"{prefix}x": F.cos(la) * F.cos(lo),
+            f"{prefix}y": F.cos(la) * F.sin(lo),
+            f"{prefix}z": F.sin(la)}
+
+
+def _chord_within(ang_max: float):
+    """Native predicate: central angle between the _p* and _q* unit
+    vectors <= ang_max.  Compared as squared chord length, which is
+    well conditioned at small angles (acos of a dot product near 1 is
+    not) and needs no trig per row."""
+    if ang_max >= math.pi:
+        return F.lit(True)
+    chord2 = (2.0 * math.sin(ang_max / 2.0)) ** 2
+    dx, dy, dz = (F.col(f"_p{c}") - F.col(f"_q{c}") for c in "xyz")
+    return dx * dx + dy * dy + dz * dz <= F.lit(chord2)
 
 
 _CARDINALITY_NODES = ("Filter", "Join", "Aggregate", "GlobalLimit",

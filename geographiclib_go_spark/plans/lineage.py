@@ -369,6 +369,21 @@ def rollback_stage(root: str, stage: str, version: int) -> dict:
     return meta
 
 
+def _tree_mtime(path: str) -> float:
+    """Latest mtime anywhere under `path` (the dir itself included).
+    A live writer touches files deep in its staging tree, which does
+    not move the top-level dir's mtime."""
+    latest = os.path.getmtime(path)
+    for dirpath, dirnames, filenames in os.walk(path):
+        for name in dirnames + filenames:
+            try:
+                latest = max(latest, os.path.getmtime(
+                    os.path.join(dirpath, name)))
+            except OSError:  # removed while we walked
+                continue
+    return latest
+
+
 def expire_snapshots(root: str, stage: str, keep: int = 2,
                      staging_ttl_s: float = 86400.0) -> list:
     """Delete all but the newest `keep` COMMITTED snapshots — never
@@ -376,7 +391,9 @@ def expire_snapshots(root: str, stage: str, keep: int = 2,
     commit.json: pre-staging-protocol leftovers) older than the
     oldest retained committed version, plus STAGING scratch older
     than `staging_ttl_s` (a crashed writer's half-assembled snapshot;
-    the TTL keeps a live concurrent writer's staging dir safe).
+    the TTL keeps a live concurrent writer's staging dir safe).  A
+    staging dir's age counts from the latest mtime anywhere in its
+    tree, so a slow writer still adding files is never swept.
     Orphans and dead staging are never readable, so without this they
     would leak disk forever (ADVICE r2).  Returns the expired version
     numbers.
@@ -390,7 +407,7 @@ def expire_snapshots(root: str, stage: str, keep: int = 2,
         for name in os.listdir(staging_parent):
             p = os.path.join(staging_parent, name)
             try:
-                if now - os.path.getmtime(p) > staging_ttl_s:
+                if now - _tree_mtime(p) > staging_ttl_s:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 continue

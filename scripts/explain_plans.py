@@ -118,7 +118,12 @@ def main():
         "LeftAnti (next round's unresolved) — no driver-held id "
         "lists, no isin() literals in the plan.  The cover join is a "
         "plain cell equi-join so AQE can pick the join strategy and "
-        "split skewed cells.",
+        "split skewed cells.  The ring-bound chord predicate (_p*/_q* "
+        "unit-vector columns) sits in that join's condition, below "
+        "the ArrowEvalPython that computes geod_s12, so only pairs "
+        "within the round's bound reach the UDF; the ring cover_of "
+        "UDF appears in ONE ArrowEvalPython feeding the Generate "
+        "(no inferred size() > 0 Filter evaluating it twice).",
         formatted(ring)))
 
     # geodesic crossings: must be ONE map-only MapInPandas stage —

@@ -17,6 +17,9 @@ import pytest
 from geographiclib_go_spark.operators import bpe
 
 ROUNDS = 20
+# the engines split words on ASCII whitespace only (sketch_hash.WS_REGEX);
+# Python's \s would also split on Unicode spaces and \x1c-\x1f
+ASCII_WS = r"[ \t\n\v\f\r]+"
 
 
 def _py_reference(texts, rounds):
@@ -25,7 +28,7 @@ def _py_reference(texts, rounds):
     pair ASC)."""
     freq = collections.Counter()
     for t in texts:
-        for w in re.split(r"\s+", t):
+        for w in re.split(ASCII_WS, t):
             if w and re.fullmatch(r"[A-Za-z0-9]+", w):
                 freq[w] += 1
     vocab = {tuple(w): n for w, n in freq.items()}
@@ -52,6 +55,30 @@ def _py_reference(texts, rounds):
             nv[tuple(out)] = nv.get(tuple(out), 0) + n
         vocab = nv
     return merges
+
+
+def test_reference_word_split_matches_engines(spark):
+    """The reference trainers' split agrees with the Spark word spec
+    and the DuckDB oracle's on text holding non-ASCII whitespace: a
+    no-break space or a \\x1c separator is part of a word, so the
+    WORD_RE filter drops that word in all three."""
+    from geographiclib_go_spark.operators.sketch_hash import WS_REGEX
+    text = ("alpha beta\u00a0gamma\tdelta \x1cepsilon\x0bzeta\u2003eta"
+            " theta")
+    want = [w for w in re.split(ASCII_WS, text)
+            if w and re.fullmatch(r"[A-Za-z0-9]+", w)]
+    assert want == ["alpha", "delta", "theta"]
+    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    got = [r.w for r in bpe.corpus_words(docs).collect()]
+    assert got == want
+    con = duckdb.connect()
+    duck = con.execute(
+        f"SELECT unnest(string_split_regex(?, '{WS_REGEX}'))",
+        [text]).fetchall()
+    assert [w for (w,) in duck
+            if w and re.fullmatch(r"[A-Za-z0-9]+", w)] == want
+    assert [w for w in re.split(r"\s+", text)
+            if re.fullmatch(r"[A-Za-z0-9]+", w)] != want
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +180,7 @@ def _py_apply(texts, rounds):
     rows = []
     for doc_id, t in texts:
         nw = nt = nc = 0
-        for w in re.split(r"\s+", t):
+        for w in re.split(ASCII_WS, t):
             if w and re.fullmatch(r"[A-Za-z0-9]+", w):
                 if w not in cache:
                     cache[w] = tokenize(w)

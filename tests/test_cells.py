@@ -104,3 +104,61 @@ def test_ring_bound_conservative_vs_geodesic():
 def test_pick_resolution():
     assert cells.pick_resolution(100e3) >= 7
     assert cells.pick_resolution(1000e3) < cells.pick_resolution(10e3)
+
+
+def _full_set_bfs(cells_in, res, rings):
+    """Reference ring expansion: re-expand the whole visited set on
+    every step (no frontier bookkeeping)."""
+    out = np.unique(np.asarray(cells_in, dtype=np.int64))
+    for _ in range(rings):
+        out = np.unique(np.concatenate(
+            [out, cells._adjacent(out, res).ravel()]))
+    return out
+
+
+def _face_corner_cells(res):
+    n = 1 << res
+    f, i, j = np.meshgrid(np.arange(6), [0, n - 1], [0, n - 1],
+                          indexing="ij")
+    return cells.fij_to_cell(f.ravel(), i.ravel(), j.ravel(), res)
+
+
+def test_batched_ring_covers_match_per_cell():
+    """One batched frontier BFS over (owner, cell) pairs gives every
+    owner exactly the cover a per-cell ring_expand gives, which in turn
+    equals a full-set BFS — at several resolutions and ring counts,
+    all 24 face-corner cells included."""
+    for res, ring_counts in ((1, (0, 1, 3, 24)), (2, (1, 2, 5, 24)),
+                             (4, (1, 3, 9, 24)), (6, (1, 3, 9))):
+        corners = _face_corner_cells(res)
+        assert corners.size == 24
+        lat, lon = _random_latlon(12)
+        base = np.unique(np.r_[cells.cell_from_latlon(lat, lon, res),
+                               corners])
+        owners = 1000 - 3 * np.arange(base.size)  # arbitrary, unsorted
+        for rings in ring_counts:
+            got_o, got_c = cells.ring_expand(base, res, rings,
+                                             owners=owners)
+            assert (np.diff(got_o) >= 0).all()
+            for o, c in zip(owners.tolist(), base.tolist()):
+                single = cells.ring_expand(np.array([c]), res, rings)
+                np.testing.assert_array_equal(got_c[got_o == o], single)
+                np.testing.assert_array_equal(
+                    single, _full_set_bfs([c], res, rings))
+            np.testing.assert_array_equal(
+                cells.ring_expand(base, res, rings),
+                _full_set_bfs(base, res, rings))
+
+
+def test_batched_ring_covers_high_res_chunks():
+    """At res 30 a packed (owner, cell) key holds one owner, so owners
+    expand chunk by chunk; the covers must not change."""
+    lat = np.array([10.0, 89.99, -45.0, 0.0])
+    lon = np.array([20.0, 0.0, 45.0, 179.9999])
+    for res in (20, 30):
+        base = cells.cell_from_latlon(lat, lon, res)
+        got_o, got_c = cells.ring_expand(base, res, 3,
+                                         owners=np.arange(base.size))
+        for k in range(base.size):
+            np.testing.assert_array_equal(
+                got_c[got_o == k], _full_set_bfs(base[k:k + 1], res, 3))

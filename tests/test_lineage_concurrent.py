@@ -14,6 +14,7 @@ import json
 import os
 import tempfile
 import threading
+import time
 
 from pyspark.sql import functions as F
 
@@ -116,6 +117,37 @@ def test_expire_sweeps_dead_staging_but_not_live(spark):
         assert not os.path.isdir(dead)
         # the committed snapshot is untouched
         assert lineage.read_stage(spark, root, "s").count() == 10
+
+
+def test_expire_keeps_slow_writer_touching_deep_files():
+    """Staleness is judged by the latest mtime anywhere in a staging
+    tree.  A slow writer whose top-level staging dir (and every dir on
+    the way down) is older than the TTL, but which keeps writing a
+    file deep inside, is live and must survive; a tree that is old all
+    the way down is dead and is swept."""
+    with tempfile.TemporaryDirectory() as root:
+        staging = os.path.join(root, "s", "_staging")
+        old = time.time() - 7200
+        trees = {}
+        for name in ("slow-writer", "dead-writer"):
+            top = os.path.join(staging, name)
+            deep = os.path.join(top, "data", "part=3")
+            os.makedirs(deep)
+            part = os.path.join(deep, "part-00000.parquet")
+            with open(part, "w") as fh:
+                fh.write("rows")
+            for p in (part, deep, os.path.dirname(deep), top):
+                os.utime(p, (old, old))
+            trees[name] = (top, part)
+        # the slow writer appends to its deep file: only that file's
+        # mtime moves, the dirs above it keep their old mtimes
+        top, part = trees["slow-writer"]
+        with open(part, "a") as fh:
+            fh.write(" more rows")
+        assert time.time() - os.path.getmtime(top) > 3600
+        lineage.expire_snapshots(root, "s", keep=2, staging_ttl_s=3600)
+        assert os.path.isfile(part)
+        assert not os.path.isdir(trees["dead-writer"][0])
 
 
 def test_version_slot_collision_retries(spark, monkeypatch):

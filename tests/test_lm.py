@@ -15,11 +15,16 @@ import pytest
 from geographiclib_go_spark.operators import lm
 
 
+# the engines split words on ASCII whitespace only (sketch_hash.WS_REGEX);
+# Python's \s would also split on Unicode spaces and \x1c-\x1f
+ASCII_WS = r"[ \t\n\v\f\r]+"
+
+
 def _py_reference(id_text_pairs):
     """Independent sequential replay: same word spec, same add-one
     smoothing, same 4-decimal rounding."""
     def words(t):
-        return [w for w in re.split(r"\s+", t)
+        return [w for w in re.split(ASCII_WS, t)
                 if w and re.fullmatch(r"[A-Za-z0-9]+", w)]
 
     uni = collections.Counter()

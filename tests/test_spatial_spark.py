@@ -741,3 +741,140 @@ def test_route_corridor_images_matches_bruteforce(spark):
         for i in np.flatnonzero(dr <= Q._CORRIDOR_M):
             want.add((f"img_{int(i):012d}", s, float(dr[i])))
     assert got == want and len(want) > 50
+
+
+def test_knn_ring_rounds_and_fallback_match_scan_topk(spark,
+                                                      monkeypatch):
+    """Ring kNN through two rounds plus the brute-force fallback (a
+    polar query with no points nearby) must equal scan_topk in ids and
+    ranks, with s12 within 1e-8 m.  The round bounds are recorded so
+    the test proves each path ran: one query resolves only in round 2
+    and the polar one only in the fallback."""
+    from geographiclib_go_spark.operators import cells as kcells
+    rng = np.random.default_rng(23)
+    n = 3000
+    ppdf = pd.DataFrame({
+        "pid": np.arange(n),
+        "lat": np.degrees(np.arcsin(rng.uniform(-0.8, 0.8, n))),
+        "lon": rng.uniform(-180, 180, n)})
+    qpdf = pd.DataFrame({
+        "qid": np.arange(8),
+        "lat": [0.0, 10.0, -20.0, 30.0, -40.0, 5.0, 58.0, 89.5],
+        "lon": [0.0, 50.0, 100.0, -150.0, 170.0, -60.0, 20.0, 0.0]})
+    pts = spark.createDataFrame(ppdf)
+    qdf = spark.createDataFrame(qpdf)
+    bounds = []
+    real_bound = kcells.ring_bound_m
+
+    def recording_bound(res, rings, b_radius):
+        bounds.append(real_bound(res, rings, b_radius))
+        return bounds[-1]
+
+    monkeypatch.setattr(kcells, "ring_bound_m", recording_bound)
+    k = 3
+    cols = ["q_qid", "rank", "pid", "s12"]
+    got = (sj.knn_join(pts, qdf, k=k, res=4, strategy="ring",
+                       max_rounds=2).select(*cols).toPandas()
+           .sort_values(["q_qid", "rank"]).reset_index(drop=True))
+    want = (sj.knn_join(pts, qdf, k=k, strategy="scan_topk")
+            .select(*cols).toPandas()
+            .sort_values(["q_qid", "rank"]).reset_index(drop=True))
+    assert len(bounds) == 2 and bounds[0] < bounds[1]
+    kth = want[want["rank"] == k].set_index("q_qid")["s12"]
+    assert (kth <= bounds[0]).any()
+    assert ((kth > bounds[0]) & (kth <= bounds[1])).any()
+    assert kth[7] > bounds[1]  # the polar query: fallback only
+    assert len(got) == len(qpdf) * k
+    pd.testing.assert_frame_equal(got[["q_qid", "rank", "pid"]],
+                                  want[["q_qid", "rank", "pid"]],
+                                  check_dtype=False)
+    np.testing.assert_allclose(got["s12"], want["s12"], rtol=0, atol=1e-8)
+
+
+def _subtree(lines, i):
+    """Indices of the plan lines below line i of a tree string."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+    out = []
+    for j in range(i + 1, len(lines)):
+        if depth(lines[j]) <= depth(lines[i]):
+            break
+        out.append(j)
+    return out
+
+
+def test_knn_ring_round_chord_filter_below_s12_udf(spark, points_df,
+                                                    queries_pdf):
+    """In a ring round the native chord predicate prunes the cell-join
+    candidates below the ArrowEvalPython that computes s12, and the
+    ring cover UDF runs once: no inferred size(cover) > 0 filter
+    clones it."""
+    qdf = spark.createDataFrame(queries_pdf.head(8))
+    out = sj.knn_join(points_df, qdf, k=3, res=4, strategy="ring",
+                      max_rounds=1)
+    lines = out._jdf.queryExecution().optimizedPlan().toString() \
+        .splitlines()
+    s12_nodes = [i for i, line in enumerate(lines)
+                 if "ArrowEvalPython [geod_s12(" in line]
+    assert s12_nodes
+    def is_cover_udf(j):
+        return "ArrowEvalPython [cover_of(" in lines[j]
+
+    for i in s12_nodes:
+        below = _subtree(lines, i)
+        chord = [j for j in below
+                 if ("Join" in lines[j] or "Filter" in lines[j])
+                 and "_px" in lines[j] and "_qx" in lines[j]
+                 and "<=" in lines[j]]
+        assert chord, "\n".join(lines[i:i + 12])
+        covers = [j for j in below if is_cover_udf(j)]
+        assert covers
+        for j in covers:
+            assert not any(is_cover_udf(m) for m in _subtree(lines, j))
+
+
+def test_ring_chord_filter_keeps_every_point_within_bound(spark):
+    """The ring round's chord predicate may drop a candidate only if
+    its s12 exceeds the round's bound, so it must keep every pair whose
+    exact inverse s12 is <= the bound: on WGS84 and on a sphere (where
+    the margin is 1e-12 rad), from a 20 m bound to a 4,000 km one,
+    pairs placed at the bound by the direct kernel in random
+    directions, pole-adjacent starts included.  Pairs far past the
+    bound must be dropped, or the filter would prune nothing."""
+    from geographiclib_go_spark.kernels.direct import direct
+    from geographiclib_go_spark.kernels.geodesic import GeodesicModel
+    from geographiclib_go_spark.operators import nearest
+    rng = np.random.default_rng(31)
+    bounds = [20.0, 3.3e3, 218e3, 1.1e6, 4.0e6]
+    n = 400
+    for g in (G, GeodesicModel(6371000.0, 0.0)):
+        lat1 = np.r_[np.degrees(np.arcsin(rng.uniform(-1, 1, n - 2))),
+                     89.9999, -90.0]
+        lon1 = rng.uniform(-180, 180, n)
+        azi1 = rng.uniform(-180, 180, n)
+        frames, far = [], []
+        for bi, bound in enumerate(bounds):
+            for scale in (1.0, 1 - 1e-9, 0.5, 3.0):
+                s = np.full(n, bound * scale + (2e5 if scale > 1 else 0))
+                d = direct(g, lat1, lon1, azi1, s)
+                frames.append(pd.DataFrame({
+                    "b": bi, "far": scale > 1,
+                    "q_lat": lat1, "q_lon": lon1,
+                    "lat": d["lat2"], "lon": d["lon2"]}))
+        pdf = pd.concat(frames, ignore_index=True)
+        pdf["s12"] = kinverse.inverse(
+            g, pdf.q_lat.to_numpy(), pdf.q_lon.to_numpy(),
+            pdf.lat.to_numpy(), pdf.lon.to_numpy(), C.DISTANCE)["s12"]
+        df = (spark.createDataFrame(pdf)
+              .withColumns(sj._unit_vector_cols("lat", "lon", "_p"))
+              .withColumns(sj._unit_vector_cols("q_lat", "q_lon", "_q")))
+        keep = df.select("b", "far", "s12", *[
+            sj._chord_within(nearest.radius_ang_max(g, bound))
+            .alias(f"k{bi}") for bi, bound in enumerate(bounds)]) \
+            .toPandas()
+        kept = keep.to_numpy()[np.arange(len(keep)),
+                               3 + keep["b"].to_numpy()].astype(bool)
+        within = keep["s12"].to_numpy() <= np.asarray(bounds)[keep["b"]]
+        assert within.sum() > 0.4 * len(keep)
+        assert kept[within].all(), keep[within & ~kept].head()
+        assert not kept[keep["far"].to_numpy()].any()
