@@ -49,10 +49,6 @@ class RhumbModel:
         self.a = float(a)
         self.f = float(f)
         self.e2 = f * (2.0 - f)
-        # signed sqrt: es > 0 oblate, es < 0 prolate (drives the
-        # atanh-vs-atan analytic continuation of e*atanh(e*x))
-        self.es = np.copysign(np.sqrt(abs(self.e2)), self.f) \
-            if self.e2 != 0.0 else 0.0
         n = f / (2.0 - f)
         self.n = n
         # A * (phi + sum c2k sin 2k phi) = meridian distance;
@@ -76,21 +72,6 @@ class RhumbModel:
 
 
 WGS84 = RhumbModel()
-
-
-def _eatanhe(x, es):
-    """e * atanh(e * x) continued analytically to prolate (es < 0),
-    where it becomes -sqrt(-e2) * atan(sqrt(-e2) * x)."""
-    if es > 0:
-        return es * np.arctanh(es * x)
-    if es < 0:
-        return -es * np.arctan(-es * x)
-    return np.zeros_like(np.asarray(x, dtype=np.float64))
-
-
-def isometric_lat(r: RhumbModel, phi):
-    """psi(phi), radians in / isometric units out."""
-    return np.arcsinh(np.tan(phi)) - _eatanhe(np.sin(phi), r.es)
 
 
 def mu_from_phi(r: RhumbModel, phi):

@@ -6,9 +6,10 @@ geodesic.go Inverse).
 DBSCAN (Ester et al., KDD'96) over geodesic distance, composed
 entirely from operators this engine has already proven individually:
 
-1. eps-neighborhood self-join  -> operators/spatial_join.distance_join
-   (cell-cover equi-join at scale, closure-broadcast scan when the
-   point set is small — both hash-oracled via sphere_radius_join);
+1. eps-neighborhood self-join  -> distance_join's two radius plans
+   (eps_self_edges, a cell-cover equi-join, at scale; the
+   operators/nearest closure scan when the point set is small — both
+   hash-oracled via sphere_radius_join);
 2. core test                   -> one groupBy count per point
    (|N_eps(p)| >= min_pts, neighborhood INCLUDING p itself, the
    original paper's convention);
@@ -45,6 +46,7 @@ from geographiclib_go_spark.kernels.geodesic import (
     GeodesicModel, WGS84_A, WGS84_F)
 from geographiclib_go_spark.operators import cells as kcells
 from geographiclib_go_spark.operators import components as cc
+from geographiclib_go_spark.operators import nearest
 from geographiclib_go_spark.operators import spatial_join as sj
 
 
@@ -111,23 +113,19 @@ def dbscan(points: DataFrame, eps_m: float, min_pts: int,
     take the minimum cluster among their core neighbors); NULL for
     noise.  Ids must be unique non-null longs.
 
-    strategy is forwarded to distance_join ('auto' picks the
-    closure-broadcast scan for small point sets, the cell-cover
-    equi-join otherwise).
+    strategy: 'scan' (the closure-broadcast radius scan), 'cover'
+    (eps_self_edges, the celled self-join) or 'auto' (scan when the
+    point set passes distance_join's auto probe, cover otherwise).
     """
     ids = points.select(F.col(id_col).cast("long").alias("qid"),
                         F.col(point_cols[0]).alias("lat"),
                         F.col(point_cols[1]).alias("lon"))
-    if strategy == "auto":
-        strategy = ("scan"
-                    if sj._scan_eligible(ids, "qid", limit_rows=4096)
-                    else "cover")
-    if strategy == "scan":
+    qrows = (nearest._probe_scan_side(ids, "qid", ("lat", "lon"))
+             if strategy == "auto" else None)
+    if strategy == "scan" or qrows is not None:
         # small point set: closure-broadcast scan join (map-only)
-        pairs = sj.distance_join(points, ids, radius_m=eps_m, a=a, f=f,
-                                 point_cols=point_cols,
-                                 query_cols=("lat", "lon"),
-                                 id_col="qid", strategy="scan")
+        pairs = nearest._radius_scan(points, ids, qrows, eps_m, a, f,
+                                     point_cols, ("lat", "lon"), "qid")
         # directed neighbor list (src -> dst), self-pair included —
         # the join emits (p, p) at s12 = 0, which is exactly the
         # "including p" the core test wants

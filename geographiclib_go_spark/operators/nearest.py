@@ -20,6 +20,15 @@ safety factor for the (reduced-latitude vs geocentric) angle mismatch,
 and is verified against the exhaustive N x M kernel evaluation in
 tests/test_nearest.py.  For f = 0 the chord order IS the geodesic
 order and the margin collapses to ties-only.
+
+The transposed shape (a SMALL query side, a big point table) is one
+closure scan, _closure_scan: a mapInPandas over the points with the
+queries in the closure, re-joined to the broadcast q_-prefixed query
+side.  knn_points_topk runs nearest_dim_kernel per chunk with the
+queries as its fact side; radius_dim_join filters by radius_ang_max
+and refines exactly.  The auto strategies of spatial_join and
+clustering.dbscan pick these scans with one probe, _probe_scan_side,
+whose rows the scan then consumes.
 """
 
 from __future__ import annotations
@@ -27,7 +36,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -40,6 +49,7 @@ from geographiclib_go_spark.kernels.inverse import inverse as kinverse
 
 MAX_DIM_ROWS = 100_000  # closure-broadcast budget (3 float64 arrays)
 CHUNK = 8192  # rows per kernel slice (keeps temporaries in cache)
+SCAN_AUTO_ROWS = 4096  # largest query side the auto joins scan
 
 
 def _unit_vectors(lat_deg: np.ndarray, lon_deg: np.ndarray) -> np.ndarray:
@@ -173,53 +183,71 @@ def make_nearest_dim_udf(dim_rows, k: int = 1,
     return nearest
 
 
-def knn_points_topk(points: DataFrame, queries, k: int,
-                    a: float = WGS84_A, f: float = WGS84_F,
-                    point_cols=("lat", "lon"),
-                    query_cols=("lat", "lon"),
-                    id_col: str = "qid") -> DataFrame:
-    """k nearest POINTS for each of a SMALL set of queries — the
-    transposed shape of nearest_dim_join, as a classic distributed
-    top-k: one scan of the points emits per-chunk local top-k
-    candidates per query (chord prefilter + exact kernel, same margin
-    bound as nearest_dim_kernel), then a tiny global window keeps the
-    true top-k.  No ring logic, no driver rounds, no shuffle of the
-    big side — the scale plan for "nearest images to each landmark"
-    at 10^12 rows.
+def _q_prefixed(df: DataFrame) -> DataFrame:
+    """Every column of the query side renamed to q_<name>: the
+    query-side naming of all geodesic-join outputs."""
+    return df.withColumnsRenamed({c: f"q_{c}" for c in df.columns})
 
-    queries: DataFrame (id, lat, lon) or iterable of (id, lat, lon).
-    Output matches spatial_join.knn_join: q_* columns + point columns
-    + s12 + rank.
-    """
-    spark = points.sparkSession
+
+def _query_rows(qdf: DataFrame, id_col: str, query_cols, limit: int) -> list:
+    """At most `limit` (id, lat, lon) rows of the query side.  The
+    limit bounds the collect, so an oversized side is detected without
+    materializing it on the driver."""
+    return qdf.select(id_col, *query_cols).limit(limit).collect()
+
+
+def _probe_scan_side(queries: DataFrame, id_col: str, query_cols):
+    """The strategy probe of the auto joins: the query side's
+    (id, lat, lon) rows when the closure scans can take it — at most
+    SCAN_AUTO_ROWS rows, ids present, non-null and distinct — else
+    None (the cover/ring plans keep per-row identity and take over).
+    One Spark job; the scans consume the returned rows, so the auto
+    path never collects the query side twice."""
+    if id_col not in queries.columns:
+        return None
+    rows = _query_rows(queries, id_col, query_cols, SCAN_AUTO_ROWS + 1)
+    ids = [r[0] for r in rows]
+    if (len(rows) > SCAN_AUTO_ROWS or None in ids
+            or len(set(ids)) < len(ids)):
+        return None
+    return rows
+
+
+def _closure_scan(points: DataFrame, queries, qrows, id_col: str,
+                  query_cols, point_cols, pairs):
+    """Shared core of the small-query-side scans: the query side rides
+    in the closure and one map-only pass over `points` emits candidate
+    (point row, q_<id_col>, s12) rows.
+
+    qrows: the side's (id, lat, lon) rows when already probed, else
+    None (collected here, limit-probed).  pairs(la, lo, qlat, qlon,
+    qvec) -> (point index, query index, s12) arrays for one CHUNK of
+    points.  Returns (candidates, q_-prefixed query side) for the
+    broadcast re-join on q_<id_col>."""
     if isinstance(queries, DataFrame):
         qdf = queries
-        # limit-probe BEFORE materializing: an oversized query side must
-        # raise, not OOM the driver inside collect()
-        qrows = [(r[id_col], r[query_cols[0]], r[query_cols[1]])
-                 for r in qdf.limit(MAX_DIM_ROWS + 1).collect()]
+        if qrows is None:
+            qrows = _query_rows(qdf, id_col, query_cols, MAX_DIM_ROWS + 1)
     else:
         qrows = list(queries)
         qdf = _ldf.literal_df(
-            spark, [(int(i), float(la), float(lo)) for i, la, lo in qrows],
+            points.sparkSession,
+            [(int(i), float(la), float(lo)) for i, la, lo in qrows],
             f"{id_col} long, lat double, lon double")
     if not qrows or len(qrows) > MAX_DIM_ROWS:
         raise ValueError(f"query side must have 1..{MAX_DIM_ROWS} rows")
     qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
     if np.unique(qids).size != qids.size:
         raise ValueError(
-            f"{id_col} must be unique for the scan-topk strategy "
-            "(the global window merges duplicate ids into one top-k); "
-            "dedupe the query side or use the cover/ring strategy")
+            f"{id_col} must be unique for the scan strategies (results "
+            "are keyed on it: duplicate ids would merge top-k sets and "
+            "multiply radius matches); dedupe the query side or use "
+            "the cover/ring strategy")
     qlat = np.array([float(r[1]) for r in qrows])
     qlon = np.array([float(r[2]) for r in qrows])
     qvec = _unit_vectors(qlat, qlon)
-    g = GeodesicModel(a, f)
-    ratio, pad = chord_margin(g)
     lat_col, lon_col = point_cols
-
     qkey = f"q_{id_col}"
-    from pyspark.sql import types as T
     out_schema = T.StructType(
         list(points.schema.fields)
         + [T.StructField(qkey, T.LongType(), False),
@@ -227,44 +255,61 @@ def knn_points_topk(points: DataFrame, queries, k: int,
 
     def gen(batches):
         for pdf in batches:
-            n_all = len(pdf)
-            for lo_i in range(0, n_all, CHUNK):
+            for lo_i in range(0, len(pdf), CHUNK):
                 sub = pdf.iloc[lo_i:lo_i + CHUNK]
-                la = sub[lat_col].to_numpy(np.float64)
-                lo = sub[lon_col].to_numpy(np.float64)
-                kk = min(k, la.size)
-                if kk == 0:
-                    continue
-                p = _unit_vectors(la, lo)
-                ang = np.arccos(np.clip(p @ qvec.T, -1.0, 1.0))
-                if kk < la.size:
-                    kth = np.partition(ang, kk - 1, axis=0)[kk - 1, :]
-                else:
-                    kth = ang.max(axis=0)
-                cand = ang <= (kth[None, :] * ratio + pad)
-                rows, cols = np.nonzero(cand)
-                s12 = kinverse(g, la[rows], lo[rows], qlat[cols],
-                               qlon[cols], C.DISTANCE)["s12"]
-                order = np.lexsort((s12, cols))
-                rows_o, cols_o, s_o = (rows[order], cols[order],
-                                       s12[order])
-                first = np.r_[True, cols_o[1:] != cols_o[:-1]]
-                grp = np.maximum.accumulate(
-                    np.where(first, np.arange(cols_o.size), 0))
-                keep = (np.arange(cols_o.size) - grp) < kk
-                out = sub.iloc[rows_o[keep]].copy()
-                out[qkey] = qids[cols_o[keep]]
-                out["s12"] = s_o[keep]
-                yield out
+                rows, cols, s12 = pairs(sub[lat_col].to_numpy(np.float64),
+                                        sub[lon_col].to_numpy(np.float64),
+                                        qlat, qlon, qvec)
+                if rows.size:
+                    out = sub.iloc[rows].copy()
+                    out[qkey] = qids[cols]
+                    out["s12"] = s12
+                    yield out
 
-    cand_df = points.mapInPandas(gen, out_schema)
-    from pyspark.sql import Window
+    return points.mapInPandas(gen, out_schema), _q_prefixed(qdf)
+
+
+def knn_points_topk(points: DataFrame, queries, k: int,
+                    a: float = WGS84_A, f: float = WGS84_F,
+                    point_cols=("lat", "lon"),
+                    query_cols=("lat", "lon"),
+                    id_col: str = "qid") -> DataFrame:
+    """k nearest POINTS for each of a SMALL set of queries — the
+    transposed shape of nearest_dim_join, as a classic distributed
+    top-k: one closure scan of the points runs nearest_dim_kernel per
+    CHUNK with the queries as its fact side (chord prefilter + exact
+    kernel, local top-min(k, chunk) per query), then a tiny global
+    window keeps the true top-k.  No ring logic, no driver rounds, no
+    shuffle of the big side — the scale plan for "nearest images to
+    each landmark" at 10^12 rows.
+
+    queries: DataFrame (id, lat, lon) or iterable of (id, lat, lon);
+    ids must be distinct.  Output matches spatial_join.knn_join: q_*
+    columns + point columns + s12 + rank.
+    """
+    return _knn_scan(points, queries, None, k, a, f, point_cols,
+                     query_cols, id_col)
+
+
+def _knn_scan(points, queries, qrows, k, a, f, point_cols, query_cols,
+              id_col):
+    """knn_points_topk over already-probed query rows (qrows=None:
+    collect them)."""
+    g = GeodesicModel(a, f)
+
+    def pairs(la, lo, qlat, qlon, qvec):
+        m = la.size
+        idx, s12 = nearest_dim_kernel(g, qlat, qlon, np.arange(m), la, lo,
+                                      _unit_vectors(la, lo), min(k, m))
+        return (idx.ravel(), np.repeat(np.arange(qlat.size), idx.shape[1]),
+                s12.ravel())
+
+    cand, q_pref = _closure_scan(points, queries, qrows, id_col,
+                                 query_cols, point_cols, pairs)
+    qkey = f"q_{id_col}"
     w = Window.partitionBy(qkey).orderBy(F.col("s12").asc())
-    top = (cand_df.withColumn("rank", F.row_number().over(w))
+    top = (cand.withColumn("rank", F.row_number().over(w))
            .filter(F.col("rank") <= k))
-    q_pref = qdf
-    for c in q_pref.columns:
-        q_pref = q_pref.withColumnRenamed(c, f"q_{c}")
     return top.join(F.broadcast(q_pref), qkey)
 
 
@@ -274,73 +319,37 @@ def radius_dim_join(points: DataFrame, queries, radius_m: float,
                     query_cols=("lat", "lon"),
                     id_col: str = "qid") -> DataFrame:
     """All (query, point) pairs with geodesic s12 <= radius_m, for a
-    SMALL query set — map-only: the chord-angle bound sigma <= R/b
-    (s12 >= b * sigma on the auxiliary sphere), widened by the same
-    safety margin as nearest_dim_kernel, prefilters candidates inside
-    the scan; the exact kernel refines.  No cover explode, no
-    broadcast join, no shuffle of the big side.
+    SMALL query set — one closure scan of the points: the chord-angle
+    bound radius_ang_max (s12 >= b * sigma on the auxiliary sphere,
+    widened by the chord_margin of nearest_dim_kernel) prefilters
+    candidates per CHUNK and the exact kernel refines.  No cover
+    explode, no shuffle of the big side.
 
-    Output matches spatial_join.distance_join: q_* columns + point
-    columns + s12.
+    queries: as knn_points_topk.  Output matches
+    spatial_join.distance_join: q_* columns + point columns + s12.
     """
-    spark = points.sparkSession
-    if isinstance(queries, DataFrame):
-        qdf = queries
-        # limit-probe BEFORE materializing (see knn_points_topk)
-        qrows = [(r[id_col], r[query_cols[0]], r[query_cols[1]])
-                 for r in qdf.limit(MAX_DIM_ROWS + 1).collect()]
-    else:
-        qrows = list(queries)
-        qdf = _ldf.literal_df(
-            spark, [(int(i), float(la), float(lo)) for i, la, lo in qrows],
-            f"{id_col} long, lat double, lon double")
-    if not qrows or len(qrows) > MAX_DIM_ROWS:
-        raise ValueError(f"query side must have 1..{MAX_DIM_ROWS} rows")
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    if np.unique(qids).size != qids.size:
-        raise ValueError(
-            f"{id_col} must be unique for the scan strategy (the "
-            "re-join on the id would multiply candidate rows); dedupe "
-            "the query side or use the cover strategy")
-    qlat = np.array([float(r[1]) for r in qrows])
-    qlon = np.array([float(r[2]) for r in qrows])
-    qvec = _unit_vectors(qlat, qlon)
+    return _radius_scan(points, queries, None, radius_m, a, f,
+                        point_cols, query_cols, id_col)
+
+
+def _radius_scan(points, queries, qrows, radius_m, a, f, point_cols,
+                 query_cols, id_col):
+    """radius_dim_join over already-probed query rows (qrows=None:
+    collect them)."""
     g = GeodesicModel(a, f)
     ang_max = radius_ang_max(g, radius_m)
-    lat_col, lon_col = point_cols
-    qkey = f"q_{id_col}"
-    out_schema = T.StructType(
-        list(points.schema.fields)
-        + [T.StructField(qkey, T.LongType(), False),
-           T.StructField("s12", T.DoubleType(), False)])
 
-    def gen(batches):
-        for pdf in batches:
-            n_all = len(pdf)
-            for lo_i in range(0, n_all, CHUNK):
-                sub = pdf.iloc[lo_i:lo_i + CHUNK]
-                la = sub[lat_col].to_numpy(np.float64)
-                lo = sub[lon_col].to_numpy(np.float64)
-                if la.size == 0:
-                    continue
-                p = _unit_vectors(la, lo)
-                ang = np.arccos(np.clip(p @ qvec.T, -1.0, 1.0))
-                rows, cols = np.nonzero(ang <= ang_max)
-                if rows.size == 0:
-                    continue
-                s12 = kinverse(g, la[rows], lo[rows], qlat[cols],
-                               qlon[cols], C.DISTANCE)["s12"]
-                keep = s12 <= radius_m
-                out = sub.iloc[rows[keep]].copy()
-                out[qkey] = qids[cols[keep]]
-                out["s12"] = s12[keep]
-                yield out
+    def pairs(la, lo, qlat, qlon, qvec):
+        ang = np.arccos(np.clip(_unit_vectors(la, lo) @ qvec.T, -1.0, 1.0))
+        rows, cols = np.nonzero(ang <= ang_max)
+        s12 = kinverse(g, la[rows], lo[rows], qlat[cols], qlon[cols],
+                       C.DISTANCE)["s12"]
+        keep = s12 <= radius_m
+        return rows[keep], cols[keep], s12[keep]
 
-    cand_df = points.mapInPandas(gen, out_schema)
-    q_pref = qdf
-    for c in q_pref.columns:
-        q_pref = q_pref.withColumnRenamed(c, f"q_{c}")
-    return cand_df.join(F.broadcast(q_pref), qkey)
+    cand, q_pref = _closure_scan(points, queries, qrows, id_col,
+                                 query_cols, point_cols, pairs)
+    return cand.join(F.broadcast(q_pref), f"q_{id_col}")
 
 
 def nearest_dim_join(big: DataFrame, dim, k: int = 1,

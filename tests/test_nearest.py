@@ -131,40 +131,49 @@ def test_spark_join_k3_explodes_ranked(spark):
     assert "Exchange" not in plan
 
 
-def test_knn_points_topk_fat_ellipsoid(spark):
+@pytest.mark.parametrize("a_,f_", [(6400000.0, 0.2), (WGS84_A, WGS84_F)])
+def test_knn_points_topk_fat_ellipsoid(spark, a_, f_):
     """The transposed margin (per-query kth chord angle) must stay
-    exact on a fat ellipsoid (f=0.2) where chord order diverges most
-    from geodesic order."""
+    exact on a fat ellipsoid (f=0.2), where chord order diverges most
+    from geodesic order, and on WGS84 — also when a partition holds
+    fewer than k points (the per-chunk top-min(k, m)) and locations
+    repeat (distance ties)."""
     from pyspark.sql import Window
+    from geographiclib_go_spark.functions.geodesic_udfs import (
+        make_inverse_s12_udf)
 
-    a_, f_ = 6400000.0, 0.2
-    pts = (spark.range(1500)
-           .select(F.col("id").alias("pid"),
-                   ((F.col("id") * 37 % 1700) / 10.0 - 85.0).alias("lat"),
-                   ((F.col("id") * 91 % 3600) / 10.0 - 180.0).alias("lon")))
+    k = 4
+    grid = (spark.range(1500)
+            .select(F.col("id").alias("pid"),
+                    ((F.col("id") * 37 % 1700) / 10.0 - 85.0).alias("lat"),
+                    ((F.col("id") * 91 % 3600) / 10.0 - 180.0).alias("lon")))
+    # 3 rows per partition (< k); ids 2j and 2j+1 share a location
+    tiny = (spark.range(0, 60, 1, 20)
+            .select(F.col("id").alias("pid"),
+                    (F.floor(F.col("id") / 2) * 5.5 - 80.0).alias("lat"),
+                    (F.floor(F.col("id") / 2) * 11.0 - 170.0).alias("lon")))
     qs = [(i, la, lo) for i, (la, lo) in enumerate(
         [(0.0, 0.0), (60.0, 120.0), (-45.0, -30.0), (89.0, 10.0),
          (-89.0, 170.0), (10.0, -179.9)])]
-    got = nn.knn_points_topk(pts, qs, k=4, a=a_, f=f_)
-    gp = got.select("q_qid", "pid", "s12").toPandas()
-
-    from geographiclib_go_spark.functions.geodesic_udfs import (
-        make_inverse_s12_udf)
     qdf = spark.createDataFrame(
         [(int(i), float(la), float(lo)) for i, la, lo in qs],
         "qid long, qlat double, qlon double")
     inv = make_inverse_s12_udf(a_, f_)
-    cand = pts.crossJoin(F.broadcast(qdf)).withColumn(
-        "d", inv(F.col("lat"), F.col("lon"),
-                 F.col("qlat"), F.col("qlon")))
     w = Window.partitionBy("qid").orderBy(F.col("d").asc())
-    exp = (cand.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= 4)
-           .select("qid", "pid", "d").toPandas())
-    for qid in exp.qid.unique():
-        want = np.sort(exp[exp.qid == qid].d.to_numpy())
-        have = np.sort(gp[gp.q_qid == qid].s12.to_numpy())
-        np.testing.assert_array_equal(have, want)
+    for pts in (grid, tiny):
+        gp = (nn.knn_points_topk(pts, qs, k=k, a=a_, f=f_)
+              .select("q_qid", "pid", "s12").toPandas())
+        cand = pts.crossJoin(F.broadcast(qdf)).withColumn(
+            "d", inv(F.col("lat"), F.col("lon"),
+                     F.col("qlat"), F.col("qlon")))
+        exp = (cand.withColumn("rk", F.row_number().over(w))
+               .filter(F.col("rk") <= k)
+               .select("qid", "pid", "d").toPandas())
+        assert len(gp) == len(exp) == k * len(qs)
+        for qid in exp.qid.unique():
+            want = np.sort(exp[exp.qid == qid].d.to_numpy())
+            have = np.sort(gp[gp.q_qid == qid].s12.to_numpy())
+            np.testing.assert_array_equal(have, want)
 
 
 def test_ellip_nearest_landmark_query_matches_pure_numpy(spark):

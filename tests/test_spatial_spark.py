@@ -361,6 +361,41 @@ def test_distance_join_duplicate_ids_fall_back_to_cover(
     c = sj.distance_join(points_df, no_id, radius).select(
         "q_lat", "pid").toPandas()
     assert len(c) == len(a)
+    # a null id is no scan key either: cover keeps that row's pairs
+    null_id = single.withColumn(
+        "qid", F.when(F.col("qid") != 0, F.col("qid")))
+    d = sj.distance_join(points_df, null_id, radius).select(
+        "q_qid", "pid").toPandas()
+    assert d.q_qid.isna().sum() == (a.q_qid == 0).sum() > 0
+    assert (set(zip(d.q_qid.fillna(0).astype(int), d.pid))
+            == set(zip(a.q_qid, a.pid)))
+    assert len(d) == len(a)
+
+
+def test_auto_strategy_probes_query_side_once(spark, points_df):
+    """strategy="auto" picks scan vs cover/ring with one probe that
+    also collects the rows the scan ships in its closure: exactly one
+    Spark job runs at call time, before any action."""
+    sc = spark.sparkContext
+    qs = spark.range(0, 12, 1, 1).select(
+        F.col("id").alias("qid"),
+        ((F.col("id") * 37) % 170 - 85).cast("double").alias("lat"),
+        ((F.col("id") * 91) % 360 - 180).cast("double").alias("lon"))
+    calls = {"distance_join": lambda: sj.distance_join(points_df, qs, 5e5),
+             "knn_join": lambda: sj.knn_join(points_df, qs, k=3)}
+    for name, call in calls.items():
+        group = f"auto-probe-{name}"
+        sc.setJobGroup(group, "auto strategy selection")
+        try:
+            out = call()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert len(jobs) == 1, (name, jobs)
+        # ... and the probe routed the 12-row side to the closure scan
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" in plan, name
 
 
 def test_radius_scan_rejects_duplicate_ids(spark, points_df, queries_pdf):
